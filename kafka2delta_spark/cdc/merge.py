@@ -19,15 +19,19 @@ A NULL ``__deleted`` flag counts as an upsert on BOTH execution paths
 (``COALESCE(__deleted = 'true', false)``) — previously the Delta path
 silently dropped such rows because NULL matched no merge clause.
 
-Two execution paths:
+Two merge executors, one apply call: the streaming layer applies every
+deduped slice through ``store.merge`` (``kafka2delta_spark.state.store``),
+and the store picks the executor:
   * ``apply_cdc_delta`` — Delta ``DeltaTable.merge`` (single MERGE with
     whenMatchedDelete / whenMatchedUpdate(guard) / whenNotMatchedInsert),
-    used when delta-spark is on the classpath. At scale this rewrites only
-    matched files (partition-pruned when ON includes partition columns).
+    behind ``DeltaStateStore.merge``. At scale this rewrites only matched
+    files (partition-pruned when ON includes partition columns).
   * ``merge_cdc_batch`` — engine-neutral full-outer-join merge producing the
-    new state DataFrame; backs the parquet state store in this environment.
-    Shuffle profile: one shuffle of each side on the key columns (AQE picks
-    broadcast when the batch side is small, the common CDC case).
+    new state DataFrame, behind ``ParquetStateStore.merge`` (run over the
+    touched partitions or the whole snapshot). It also carries schema
+    evolution (Delta ``mergeSchema`` parity). Shuffle profile: one shuffle
+    of each side on the key columns (AQE picks broadcast when the batch
+    side is small, the common CDC case).
 """
 
 from __future__ import annotations
@@ -47,51 +51,22 @@ def defined_keys_predicate(key_cols: list[str]):
 
 
 def exclude_null_key_changes(
-    changes_df: DataFrame, key_cols: list[str], on_null_key: str = "drop"
+    changes_df: DataFrame, key_cols: list[str]
 ) -> DataFrame:
-    """Enforce the Debezium PK contract on a change set.
+    """Enforce the Debezium PK contract on a change set: drop NULL-key rows.
 
     A NULL primary key can never MERGE-match (``ON t.k = s.k`` is false
     for NULL = NULL on every engine, Delta included), so a malformed row
     would fire the not-matched INSERT on every redelivery and grow state
     unboundedly — the corruption mode the reference inherits from Delta
-    MERGE (ref stream/stream.py:114-148).
-
-    * ``on_null_key='drop'`` (default): filter the rows out. Callers that
-      want the drop to be *observable* count NULL-key rows on the deduped
-      slice before the merge (see
-      ``streaming.stream.process_topic_slice``) — an upstream contract
-      violation should be visible, not silent.
-    * ``on_null_key='error'``: strict mode — the job fails loudly at the
-      executor on the first offending row (``assert_true`` inside the
-      filter, so the check cannot be pruned from the plan).
+    MERGE (ref stream/stream.py:114-148). The drop is made *observable*
+    upstream: ``streaming.stream.process_topic_slice`` counts NULL-key rows
+    on the deduped slice before the merge, or rejects the batch under
+    ``TableConfig.on_null_key='error'``.
     """
-    if on_null_key not in ("drop", "error"):
-        raise ValueError(
-            f"on_null_key must be 'drop' or 'error', got {on_null_key!r}"
-        )
     if not key_cols:
         return changes_df
-    defined = defined_keys_predicate(key_cols)
-    if on_null_key == "error":
-        msg = (
-            "CDC change row with NULL primary key (key cols: "
-            f"{', '.join(key_cols)}) — violates the Debezium PK contract; "
-            "a NULL key never MERGE-matches and would re-INSERT on every "
-            "redelivery"
-        )
-        # OR-form so either evaluation order raises for an offending row:
-        # a defined row passes whichever operand runs first (assert_true
-        # yields NULL -> isNull is true), while a NULL-key row either
-        # fails `defined` and evaluates the assert, or hits the assert
-        # directly. NOTE: if a caller composes ANOTHER `k IS NOT NULL`
-        # filter on top, Catalyst may fuse and short-circuit past the
-        # assert — pipeline strict mode therefore checks eagerly before
-        # the merge (streaming.stream.process_topic_slice).
-        return changes_df.filter(
-            defined | F.assert_true(defined, F.lit(msg)).isNull()
-        )
-    return changes_df.filter(defined)
+    return changes_df.filter(defined_keys_predicate(key_cols))
 
 
 def split_upserts_deletes(
@@ -113,7 +88,6 @@ def merge_cdc_batch(
     key_cols: list[str],
     lsn_col: str = LSN_COL,
     deleted_col: str = DELETED_COL,
-    on_null_key: str = "drop",
 ) -> DataFrame:
     """Apply a deduped change set to the current state; returns new state.
 
@@ -125,30 +99,52 @@ def merge_cdc_batch(
     The new state's schema is ``changes_df`` minus ``deleted_col``
     (target schema = source minus the delete flag, ref stream/stream.py:106).
 
-    NULL-key change rows are excluded (or rejected with
-    ``on_null_key='error'``): a NULL primary key violates the Debezium PK
-    contract and CANNOT be merged — the key equi-join (this full-outer
-    join, and equally Delta's own ``MERGE ... ON t.k = s.k``, which the
-    reference uses) never matches NULL = NULL, so a malformed null-key row
-    would take the not-matched INSERT branch on EVERY batch it appears in
-    and accumulate duplicate state rows unboundedly. The reference
+    Schema evolution (Delta ``mergeSchema`` / Debezium ALTER-TABLE parity):
+    when the state's column set differs from the change set's — the
+    upstream table gained a column, or a replayed pre-evolution batch lacks
+    one the state already has — each side is padded with typed NULL columns
+    for the other side's extras, state columns first and new change columns
+    appended (the Delta column-ordering rule). Rows the change set never
+    touches read NULL in a new column. Key, LSN and delete-flag columns must
+    exist on the change side; a new column may not be a key (Delta rejects
+    that too).
+
+    NULL-key change rows are excluded: a NULL primary key violates the
+    Debezium PK contract and CANNOT be merged — the key equi-join (this
+    full-outer join, and equally Delta's own ``MERGE ... ON t.k = s.k``,
+    which the reference uses) never matches NULL = NULL, so a malformed
+    null-key row would take the not-matched INSERT branch on EVERY batch it
+    appears in and accumulate duplicate state rows unboundedly. The reference
     inherits exactly that corruption from Delta MERGE; here it is closed
     at the operator — observably (see :func:`exclude_null_key_changes`).
     """
-    changes_df = exclude_null_key_changes(changes_df, key_cols, on_null_key)
+    changes_df = exclude_null_key_changes(changes_df, key_cols)
     target_cols = [c for c in changes_df.columns if c != deleted_col]
 
     if state_df is None:
         live, _ = split_upserts_deletes(changes_df, deleted_col)
         return live.select(*target_cols)
 
+    if set(state_df.columns) != set(target_cols):
+        target_cols = list(dict.fromkeys([*state_df.columns, *target_cols]))
+    dtypes = {
+        f.name: f.dataType for f in (*changes_df.schema, *state_df.schema)
+    }
+
+    def padded(df: DataFrame) -> list:
+        # typed NULLs (never NullType — parquet can't store void)
+        return [
+            F.col(c) if c in df.columns else F.lit(None).cast(dtypes[c]).alias(c)
+            for c in target_cols
+        ]
+
     s = state_df.select(
         *[F.col(c).alias(f"__k_{c}") for c in key_cols],
-        F.struct(*[F.col(c) for c in target_cols]).alias("__s"),
+        F.struct(*padded(state_df)).alias("__s"),
     )
     c = changes_df.select(
         *[F.col(c_).alias(f"__k_{c_}") for c_ in key_cols],
-        F.struct(*[F.col(c_) for c_ in target_cols]).alias("__c"),
+        F.struct(*padded(changes_df)).alias("__c"),
         F.coalesce(F.col(deleted_col) == F.lit("true"), F.lit(False)).alias(
             "__is_delete"
         ),
@@ -172,53 +168,6 @@ def merge_cdc_batch(
         joined.select(row.alias("__row"))
         .filter(F.col("__row").isNotNull())
         .select("__row.*")
-    )
-
-
-def merge_cdc_batch_evolving(
-    state_df: DataFrame | None,
-    changes_df: DataFrame,
-    key_cols: list[str],
-    lsn_col: str = LSN_COL,
-    deleted_col: str = DELETED_COL,
-) -> DataFrame:
-    """Schema-evolving CDC merge — Delta ``mergeSchema`` / Debezium
-    ALTER-TABLE parity.
-
-    When the upstream table gains a column mid-stream, the change set's
-    schema widens past the state's (or, on replay against a newer store,
-    narrows below it). Delta MERGE with ``mergeSchema=true`` resolves this
-    by unioning the schemas and null-filling the missing side; this is the
-    engine-neutral equivalent: each side is padded with NULL-typed columns
-    for the other side's extras (state column order first, new change
-    columns appended — the Delta column-ordering rule), then the standard
-    LSN-guarded merge applies. Rows the change set never touches keep NULL
-    in the new column — exactly the semantics a backfilling reader must
-    expect after ADD COLUMN.
-
-    Key, LSN and delete-flag columns must exist on the change side; a
-    NEW column may not be a key (Delta rejects that too)."""
-    if state_df is None:
-        return merge_cdc_batch(None, changes_df, key_cols, lsn_col, deleted_col)
-    state_cols = list(state_df.columns)
-    change_cols = [c for c in changes_df.columns if c != deleted_col]
-    missing_in_state = [c for c in change_cols if c not in state_cols]
-    missing_in_changes = [c for c in state_cols if c not in changes_df.columns]
-    for c in missing_in_state:
-        state_df = state_df.withColumn(
-            c, F.lit(None).cast(changes_df.schema[c].dataType)
-        )
-    for c in missing_in_changes:
-        changes_df = changes_df.withColumn(
-            c, F.lit(None).cast(state_df.schema[c].dataType)
-        )
-    ordered = state_cols + missing_in_state
-    return merge_cdc_batch(
-        state_df.select(*ordered),
-        changes_df.select(*ordered, deleted_col),
-        key_cols,
-        lsn_col,
-        deleted_col,
     )
 
 
@@ -272,7 +221,6 @@ def apply_cdc_delta(
     partition_cols: list[str] | None = None,
     lsn_col: str = LSN_COL,
     deleted_col: str = DELETED_COL,
-    on_null_key: str = "drop",
 ) -> None:
     """Single combined Delta MERGE (requires delta-spark on the classpath).
 
@@ -280,8 +228,8 @@ def apply_cdc_delta(
     docstring for the pruning/guard guarantees; the spec is unit-tested
     jar-free and this function only binds it to the DeltaTable API.
 
-    NULL-key change rows are excluded before the MERGE (or rejected with
-    ``on_null_key='error'``), mirroring :func:`merge_cdc_batch`: Delta's
+    NULL-key change rows are excluded before the MERGE, mirroring
+    :func:`merge_cdc_batch`: Delta's
     ``ON t.k = s.k`` never matches a NULL key, so such a row would fire
     the not-matched INSERT on every replayed batch and accumulate
     duplicate state rows (the reference inherits this exact behavior from
@@ -289,7 +237,7 @@ def apply_cdc_delta(
     """
     from delta.tables import DeltaTable  # gated import
 
-    changes_df = exclude_null_key_changes(changes_df, key_cols, on_null_key)
+    changes_df = exclude_null_key_changes(changes_df, key_cols)
 
     target = (
         DeltaTable.forPath(spark, target_table_or_path)

@@ -215,8 +215,9 @@ def qx55_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolving CDC merge (Delta ``mergeSchema`` / Debezium
     ALTER-TABLE-ADD-COLUMN parity): the pre-split state has columns
     (user_id, event_id, event_type); the post-split change set arrives
-    with a NEW ``v1000`` column. ``merge_cdc_batch_evolving`` unions the
-    schemas (state rows null-fill the new column), then applies the
+    with a NEW ``v1000`` column. ``merge_cdc_batch`` — the merge both
+    state stores' ``merge`` runs — unions the schemas because the column
+    sets differ (state rows null-fill the new column), then applies the
     standard LSN-guarded upsert/delete merge — so keys whose newest row
     predates the column addition read NULL, keys updated after it carry
     the value, and stale/deleted keys behave exactly as in q71. This is
@@ -226,8 +227,6 @@ def qx55_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: identical shuffle profile to q71 (latest-per-key hash-aggs,
     one full-outer merge join on the key); the evolution step is pure
     projection — no extra scan, no shuffle."""
-    from kafka2delta_spark.cdc.merge import merge_cdc_batch_evolving
-
     # CDC primary keys are non-null (Debezium PK contract, see q71)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull()
@@ -249,6 +248,4 @@ def qx55_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("false")
         .alias("__deleted"),
     )
-    return merge_cdc_batch_evolving(
-        state, changes, ["user_id"], lsn_col="event_id"
-    )
+    return merge_cdc_batch(state, changes, ["user_id"], lsn_col="event_id")

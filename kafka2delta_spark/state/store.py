@@ -15,6 +15,12 @@ sink behind a minimal store interface with two implementations:
     downstream reads get partition pruning, like the reference's
     year/month layout (ref stream/test/stream_test.py:108-110).
 
+Both apply a CDC change set with the same call,
+``store.merge(changes_df, key_cols, lsn_col, deleted_col)``, which is one
+commit: the store decides how to execute it (Delta MERGE in place, or a
+partition-selective / full-snapshot parquet rewrite) and never hands the
+decision back to the caller.
+
 Both give read-your-writes within a driver; the parquet store is a
 correctness-equivalent stand-in, not a concurrency story — on a real
 cluster you'd use Delta/Iceberg.
@@ -42,6 +48,12 @@ from kafka2delta_spark.session import local_rows
 #: on-disk name, so the selective merge refuses them (full-rewrite fallback)
 #: rather than risk double-counting a touched partition as untouched.
 _HIVE_UNSAFE_CHARS = set(' "#%\'*/:=?\\{}[]^\x7f')
+
+
+def _ensure_database(spark: SparkSession, table_name: str) -> None:
+    """``CREATE DATABASE IF NOT EXISTS`` for a qualified ``db.table`` name."""
+    if "." in table_name:
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS `{table_name.split('.')[0]}`")
 
 
 def _hive_dir_safe(value) -> bool:
@@ -97,19 +109,26 @@ class ParquetStateStore:
         over the current snapshot (metastore parity with the reference's
         ``saveAsTable`` — ref utils/utils.py:37-58; its MERGE mutates one
         location in place, while this store commits versioned dirs, so the
-        catalog entry is repointed per commit instead of created once)."""
+        catalog entry is repointed per commit instead of created once).
+
+        An empty snapshot (every row deleted from a partitioned store) has
+        no data file to infer a schema from, so its view is a typed empty
+        ``SELECT`` built from the stored ``_SCHEMA.json`` instead."""
         if not self.table_name:
             return
         cur = self._version()
         if cur is None:
             return
-        db = self.table_name.split(".")[0] if "." in self.table_name else None
-        if db:
-            self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
-        self.spark.sql(
-            f"CREATE OR REPLACE VIEW {self.table_name} AS "
-            f"SELECT * FROM parquet.`{self._dir(cur)}`"
-        )
+        _ensure_database(self.spark, self.table_name)
+        d = self._dir(cur)
+        if any(f.endswith(".parquet") for _, _, fs in os.walk(d) for f in fs):
+            body = f"SELECT * FROM parquet.`{d}`"
+        else:
+            body = "SELECT {} WHERE false".format(", ".join(
+                f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
+                for f in self.read().schema
+            ))
+        self.spark.sql(f"CREATE OR REPLACE VIEW {self.table_name} AS {body}")
 
     # -- version pointer ---------------------------------------------------
     def _version(self) -> int | None:
@@ -188,6 +207,13 @@ class ParquetStateStore:
         if self.partition_cols:
             writer = writer.partitionBy(*self.partition_cols)
         writer.parquet(self._dir(v))
+        self._commit(v, df, metadata)
+
+    def _commit(
+        self, v: int, df: DataFrame, metadata: dict | None = None
+    ) -> None:
+        """Commit tail shared by every write: schema (and metadata) beside
+        the data, atomic pointer flip, catalog repoint, retention prune."""
         self._write_schema(v, df)
         if metadata is not None:
             with open(os.path.join(self._dir(v), "_META.json"), "w") as fh:
@@ -217,52 +243,52 @@ class ParquetStateStore:
         key_cols: list[str],
         lsn_col: str,
         deleted_col: str,
-    ) -> bool:
-        """Partition-selective merge: rewrite ONLY the hive partitions the
-        change set touches; unchanged partitions are hardlinked into the new
-        version dir (per-file ``os.link`` — zero copy, and snapshot
+    ) -> None:
+        """Apply a deduped CDC change set as one commit.
+
+        Partition-selective when possible: rewrite ONLY the hive partitions
+        the change set touches; unchanged partitions are hardlinked into
+        the new version dir (per-file ``os.link`` — zero copy, and snapshot
         retention still works because deleting an old version dir only
-        drops its links).
+        drops its links). This is the parquet-store analogue of Delta
+        MERGE's file pruning: per-micro-batch cost tracks touched
+        partitions, not total state. Correctness relies on the same caveat
+        the reference documents for putting partition columns in its MERGE
+        ON clause: partition values must be derived from immutable columns,
+        so a key's rows can only ever live in one partition.
 
-        This is the parquet-store analogue of Delta MERGE's file pruning:
-        per-micro-batch cost tracks touched partitions, not total state.
-        Correctness relies on the same caveat the reference documents for
-        putting partition columns in its MERGE ON clause: partition values
-        must be derived from immutable columns, so a key's rows can only
-        ever live in one partition.
-
-        Returns False (caller must use the full read-merge-overwrite path)
-        when a selective merge isn't possible: unpartitioned store, change
-        set missing partition columns or carrying NULL / non-hive-encodable
-        partition values (see :func:`_hive_dir_safe`), or a schema change vs
-        the current snapshot. An empty change set returns True without
-        committing a version (no-op).
+        Otherwise — no state yet, unpartitioned store, a schema change vs
+        the current snapshot (including change sets missing partition
+        columns), or NULL / non-hive-encodable partition values (see
+        :func:`_hive_dir_safe`) — the whole snapshot is merged with
+        :func:`kafka2delta_spark.cdc.merge.merge_cdc_batch` (which also
+        evolves the schema) and committed via :meth:`overwrite`. An empty
+        change set on the selective path commits no version (no-op).
         """
         from kafka2delta_spark.cdc.merge import merge_cdc_batch
 
-        cur = self._version()
-        if (
-            not self.partition_cols
-            or cur is None
-            or any(c not in changes_df.columns for c in self.partition_cols)
-        ):
-            return False
         state = self.read()
-        if set(state.columns) != {
-            c for c in changes_df.columns if c != deleted_col
-        }:
-            return False  # schema evolution → full rewrite path
-        # touched partition values: metadata-sized collect (same class as
-        # topic/schema-pair discovery in the streaming layer)
-        parts = changes_df.select(*self.partition_cols).distinct().collect()
-        if not parts:
-            return True  # empty change set: the merge is a no-op
-        if any(
-            r[c] is None or not _hive_dir_safe(r[c])
-            for r in parts
-            for c in self.partition_cols
+        parts = None
+        if (
+            state is not None
+            and self.partition_cols
+            and set(state.columns)
+            == {c for c in changes_df.columns if c != deleted_col}
         ):
-            return False
+            # touched partition values: metadata-sized collect (same class
+            # as topic/schema-pair discovery in the streaming layer)
+            parts = changes_df.select(*self.partition_cols).distinct().collect()
+            if not parts:
+                return  # empty change set: the merge is a no-op
+            if not all(
+                _hive_dir_safe(r[c]) for r in parts for c in self.partition_cols
+            ):
+                parts = None
+        if parts is None:
+            self.overwrite(
+                merge_cdc_batch(state, changes_df, key_cols, lsn_col, deleted_col)
+            )
+            return
         touched = functools.reduce(
             operator.or_,
             [
@@ -277,6 +303,7 @@ class ParquetStateStore:
         merged = merge_cdc_batch(
             state.filter(touched), changes_df, key_cols, lsn_col, deleted_col
         )
+        cur = self._version()
         v = cur + 1
         dst = self._dir(v)
         writer = merged.write.mode("overwrite").partitionBy(*self.partition_cols)
@@ -302,12 +329,7 @@ class ParquetStateStore:
                 link_path = os.path.join(out_dir, f)
                 if not os.path.exists(link_path):
                     os.link(os.path.join(root, f), link_path)
-        self._write_schema(v, merged)
-        self._set_version(v)
-        self._register()
-        for old in self.history()[: -self.retain_versions]:
-            shutil.rmtree(self._dir(old), ignore_errors=True)
-        return True
+        self._commit(v, merged)
 
     def read_changes(
         self, from_version: int, to_version: int, key_cols: list[str]
@@ -443,9 +465,7 @@ class DeltaStateStore:
             return
         if self.exists():
             if self.table_name:
-                db = self.table_name.split(".")[0] if "." in self.table_name else None
-                if db:
-                    self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
+                _ensure_database(self.spark, self.table_name)
                 self.spark.sql(
                     f"CREATE TABLE IF NOT EXISTS {self.table_name} "
                     f"USING DELTA LOCATION '{self.path}'"
@@ -459,18 +479,31 @@ class DeltaStateStore:
         if self.partition_cols:
             writer = writer.partitionBy(*self.partition_cols)
         if self.table_name:
-            db = self.table_name.split(".")[0] if "." in self.table_name else None
-            if db:
-                self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
+            _ensure_database(self.spark, self.table_name)
             writer.saveAsTable(self.table_name)
         else:
             writer.save(self.path)
 
-    def merge(self, changes_df: DataFrame, key_cols: list[str]) -> None:
+    def merge(
+        self,
+        changes_df: DataFrame,
+        key_cols: list[str],
+        lsn_col: str,
+        deleted_col: str,
+    ) -> None:
+        """Apply a deduped CDC change set as one in-place file-level MERGE
+        (the reference's sink semantics, ref stream/stream.py:114-148):
+        only files holding matched keys rewrite; schema evolution via Delta
+        autoMerge. Creates the table from the change schema (minus the
+        delete flag) on first use."""
         from kafka2delta_spark.cdc.merge import apply_cdc_delta
 
+        self.create_if_not_exists(
+            T.StructType([f for f in changes_df.schema if f.name != deleted_col])
+        )
         apply_cdc_delta(
-            self.spark, self.path, changes_df, key_cols, self.partition_cols
+            self.spark, self.path, changes_df, key_cols, self.partition_cols,
+            lsn_col, deleted_col,
         )
 
 

@@ -6,7 +6,11 @@ wires ``readStream.format("kafka")`` → envelope projection → a monolithic
 (ref stream/stream.py:39-156). The rebuild splits that closure into pure,
 unit-testable batch functions:
 
-  * :func:`process_topic_slice` — one topic's records → merged state.
+  * :func:`process_topic_slice` — one topic's records → merged state, as
+    ONE ``store.merge`` call per schema pair: the store (Delta MERGE, or
+    the parquet store's selective / full rewrite) owns the whole apply
+    decision and commit, so the foreachBatch body never branches on the
+    backend.
   * :func:`apply_cdc_micro_batch` — full micro-batch fan-out over topics.
   * :func:`stream_to_delta` — the thin streaming shell (source + trigger +
     checkpoint + foreachBatch + liveness), API-compatible in spirit with the
@@ -30,33 +34,20 @@ from typing import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from kafka2delta_spark.cdc.avro_codec import decode_avro
 from kafka2delta_spark.cdc.debezium import cast_debezium_columns
 from kafka2delta_spark.cdc.dedup import latest_per_key
-from kafka2delta_spark.cdc.merge import (
-    defined_keys_predicate,
-    merge_cdc_batch,
-)
+from kafka2delta_spark.cdc.merge import defined_keys_predicate
 from kafka2delta_spark.cdc.registry import SchemaRegistry, column_names_from_schema_str
 from kafka2delta_spark.cdc.wire import parse_confluent_envelope
 from kafka2delta_spark.config import DELETED_COL, LSN_COL, TableConfig
+from kafka2delta_spark.session import delta_available
 from kafka2delta_spark.state.store import DeltaStateStore, ParquetStateStore
 
 DEFAULT_AVRO_OPTIONS = {"mode": "FAILFAST"}  # ref stream/stream.py:36-37
 
 logger = logging.getLogger(__name__)
-
-
-def delta_available() -> bool:
-    """True when delta-spark is importable (jar + python pkg present)."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def make_state_store(
@@ -184,7 +175,7 @@ def process_topic_slice(
             ).count()
 
         try:
-            _apply_latest_to_store(latest, store, pk_cols, lsn_col, deleted_col)
+            store.merge(latest, pk_cols, lsn_col, deleted_col)
         finally:
             if persisted:
                 latest.unpersist()
@@ -202,66 +193,6 @@ def process_topic_slice(
             )
 
     return {"null_key_rows": null_key_total}
-
-
-def _apply_latest_to_store(
-    latest: DataFrame,
-    store: ParquetStateStore | DeltaStateStore,
-    pk_cols: list[str],
-    lsn_col: str,
-    deleted_col: str,
-) -> None:
-    """Route one deduped change slice to the store's best merge path."""
-    if isinstance(store, DeltaStateStore):
-        # In-place file-level MERGE (the reference's sink semantics,
-        # ref stream/stream.py:114-148): only files holding matched keys
-        # rewrite; schema evolution via Delta autoMerge. This is the
-        # scale path — the parquet paths below rewrite at partition or
-        # snapshot granularity.
-        target_schema = T.StructType(
-            [f for f in latest.schema.fields if f.name != deleted_col]
-        )
-        store.create_if_not_exists(target_schema)
-        store.merge(latest, pk_cols)
-        return
-
-    # Parquet fallback, partition-selective first: rewrite only the
-    # hive partitions the batch touches, hardlink the rest (the
-    # parquet analogue of Delta's file pruning). Returns False —
-    # full read-merge-overwrite below — on schema evolution, missing/
-    # NULL partition values, or an unpartitioned store.
-    if store.merge(latest, pk_cols, lsn_col, deleted_col):
-        return
-
-    state = store.read()
-    # Schema evolution (Delta autoMerge equivalent, ref conftest.py:101):
-    # union by name with missing columns as NULLs in either direction.
-    if state is not None and set(state.columns) != set(
-        c for c in latest.columns if c != deleted_col
-    ):
-        target_cols = [c for c in latest.columns if c != deleted_col]
-        merged_cols = list(dict.fromkeys(list(state.columns) + target_cols))
-        # typed NULLs (never NullType — parquet can't store void)
-        dtypes = dict(state.dtypes) | dict(latest.dtypes)
-        state = state.select(
-            *[
-                F.col(c)
-                if c in state.columns
-                else F.lit(None).cast(dtypes[c]).alias(c)
-                for c in merged_cols
-            ]
-        )
-        latest = latest.select(
-            *[
-                F.col(c)
-                if c in latest.columns
-                else F.lit(None).cast(dtypes[c]).alias(c)
-                for c in merged_cols
-            ],
-            deleted_col,
-        )
-    new_state = merge_cdc_batch(state, latest, pk_cols, lsn_col, deleted_col)
-    store.overwrite(new_state)
 
 
 def apply_cdc_micro_batch(

@@ -433,9 +433,9 @@ def test_null_pk_clean_batch_logs_nothing(spark, tmp_path, caplog):
 
 
 def test_null_pk_error_policy_fails_the_batch(spark, tmp_path):
-    """Strict mode: the batch fails loudly on the first NULL-PK row
-    (assert_true at the executor), so upstream contract violations cannot
-    be absorbed."""
+    """Strict mode: the batch fails loudly on the first NULL-PK row (an
+    eager scan of the deduped slice before the store merges), so upstream
+    contract violations cannot be absorbed."""
     registry, key_sid, val_sid, config, store = _nullable_rig(
         spark, tmp_path, "error"
     )
@@ -451,13 +451,9 @@ def test_null_pk_error_policy_fails_the_batch(spark, tmp_path):
 
 
 def test_on_null_key_policy_is_validated():
-    from kafka2delta_spark.cdc.merge import exclude_null_key_changes
-
     with pytest.raises(ValueError, match="on_null_key"):
         TableConfig(schema_name="a", table_name="b", path="/tmp/x",
                     on_null_key="ignore")
-    with pytest.raises(ValueError, match="on_null_key"):
-        exclude_null_key_changes(None, ["k"], "ignore")
 
 
 def test_null_pk_drop_counted_on_later_batches(spark, tmp_path):
@@ -512,3 +508,46 @@ def test_null_pk_drop_counted_on_later_batches(spark, tmp_path):
     assert q.cdc_metrics.null_key_rows() == 1
     assert per_batch[0].get("null_key_rows", 0) == 0
     assert sum(m.get("null_key_rows", 0) for b, m in per_batch.items() if b > 0) == 1
+
+
+def test_unpartitioned_apply_job_count_is_pinned(spark, tmp_path):
+    """One single-topic micro-batch against an unpartitioned parquet store
+    that already holds state launches a fixed number of Spark jobs:
+    envelope topic discovery, schema-pair discovery, then the read-merge-
+    overwrite commit. Counted per job group with the status tracker, so a
+    change to the store's apply path that adds a job fails here."""
+    registry = InMemorySchemaRegistry()
+    key_sid = registry.register(KEY_SCHEMA)
+    v1 = registry.register(USERS_V1)
+    config = TableConfig(
+        schema_name="cdc", table_name="users_flat", path=str(tmp_path / "flat")
+    )
+    store = make_state_store(spark, config, backend="parquet")
+    store.table_name = None
+    seed = spark.createDataFrame(
+        [mk_record(USERS_V1, key_sid, v1, uid, 10) for uid in (1, 2, 3)],
+        KAFKA_SCHEMA,
+    )
+    apply_cdc_micro_batch(seed, registry, {TOPIC: config}, {TOPIC: store})
+    batch = spark.createDataFrame(
+        [
+            mk_record(USERS_V1, key_sid, v1, 2, 20, name="bob2"),
+            mk_record(USERS_V1, key_sid, v1, 1, 5, name="stale"),
+            mk_record(USERS_V1, key_sid, v1, 3, 30, deleted="true"),
+            mk_record(USERS_V1, key_sid, v1, 4, 40, name="dave"),
+        ],
+        KAFKA_SCHEMA,
+    )
+    sc = spark.sparkContext
+    group = "pin_unpartitioned_apply"
+    sc.setJobGroup(group, "one unpartitioned CDC apply")
+    try:
+        apply_cdc_micro_batch(batch, registry, {TOPIC: config}, {TOPIC: store})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert {r["id"]: r["name"] for r in store.read().collect()} == {
+        1: "user1", 2: "bob2", 4: "dave"
+    }
+    assert jobs == 11

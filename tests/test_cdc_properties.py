@@ -20,6 +20,8 @@ model (plain dict replay of the per-batch latest rows) is the oracle.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -176,7 +178,16 @@ def test_selective_merge_equals_full_merge(spark, tmp_path_factory, ops):
     batch = latest_per_key(
         spark.createDataFrame(rows, PART_SCHEMA), ["pk"], "__log_sequence_number"
     )
-    assert sel.merge(batch, ["pk"], "__log_sequence_number", "__deleted") is True
+    v_before = sel._version()
+    sel.merge(batch, ["pk"], "__log_sequence_number", "__deleted")
+    # selective path: a partition the batch never touches is hardlinked
+    # from the previous version, not rewritten
+    def inodes(v, year):
+        leaf = os.path.join(sel._dir(v), f"year={year}")
+        return {os.stat(os.path.join(leaf, f)).st_ino for f in os.listdir(leaf)}
+
+    for year in {2023, 2024} - {r[3] for r in rows}:
+        assert inodes(sel._version(), year) == inodes(v_before, year)
     full.overwrite(
         merge_cdc_batch(
             full.read(), batch, ["pk"], "__log_sequence_number", "__deleted"

@@ -1,12 +1,12 @@
-"""merge_cdc_batch_evolving: Delta mergeSchema parity on the engine-neutral
-path — widening (change set adds a column), narrowing (old replayed batch
-lacks a column the store already has), and the LSN/delete semantics must
-pass through unchanged.
+"""merge_cdc_batch schema evolution: Delta mergeSchema parity on the
+engine-neutral path — widening (change set adds a column), narrowing (old
+replayed batch lacks a column the store already has), and the LSN/delete
+semantics must pass through unchanged.
 """
 
 from pyspark.sql import functions as F
 
-from kafka2delta_spark.cdc.merge import merge_cdc_batch_evolving
+from kafka2delta_spark.cdc.merge import merge_cdc_batch
 
 
 def _df(spark, rows, schema):
@@ -22,7 +22,7 @@ def test_widening_null_fills_untouched_rows(spark):
     )
     out = {
         r["id"]: (r["lsn"], r["v"], r["extra"])
-        for r in merge_cdc_batch_evolving(state, changes, ["id"], lsn_col="lsn").collect()
+        for r in merge_cdc_batch(state, changes, ["id"], lsn_col="lsn").collect()
     }
     assert out == {
         1: (10, "a", None),   # untouched: new column null-filled
@@ -30,7 +30,7 @@ def test_widening_null_fills_untouched_rows(spark):
         3: (5, "c", 7),       # inserted
     }
     # column order: state columns first, new column appended
-    cols = merge_cdc_batch_evolving(state, changes, ["id"], lsn_col="lsn").columns
+    cols = merge_cdc_batch(state, changes, ["id"], lsn_col="lsn").columns
     assert cols == ["id", "lsn", "v", "extra"]
 
 
@@ -46,7 +46,7 @@ def test_narrowing_replayed_old_batch(spark):
     )
     out = {
         r["id"]: (r["lsn"], r["v"], r["extra"])
-        for r in merge_cdc_batch_evolving(state, old_batch, ["id"], lsn_col="lsn").collect()
+        for r in merge_cdc_batch(state, old_batch, ["id"], lsn_col="lsn").collect()
     }
     # stale update rejected by the LSN guard; insert gets NULL extra
     assert out == {1: (10, "a", 5), 2: (3, "new", None)}
@@ -65,7 +65,7 @@ def test_delete_and_guard_semantics_survive_evolution(spark):
     )
     out = {
         r["id"]: r["v"]
-        for r in merge_cdc_batch_evolving(state, changes, ["id"], lsn_col="lsn").collect()
+        for r in merge_cdc_batch(state, changes, ["id"], lsn_col="lsn").collect()
     }
     assert out == {2: "b"}
 
@@ -77,17 +77,17 @@ def test_new_column_type_preserved(spark):
         [(1, 11, "a2", 1.5, "false")],
         "id long, lsn long, v string, score double, __deleted string",
     )
-    merged = merge_cdc_batch_evolving(state, changes, ["id"], lsn_col="lsn")
+    merged = merge_cdc_batch(state, changes, ["id"], lsn_col="lsn")
     assert dict(merged.dtypes)["score"] == "double"
     assert merged.collect()[0]["score"] == 1.5
 
 
 def test_store_full_rewrite_path_with_evolution(spark, tmp_path):
-    """End-to-end through ParquetStateStore: the partition-selective merge
-    REFUSES a schema-changing batch (returns False), and the documented
-    fallback — read → merge_cdc_batch_evolving → overwrite — commits a
-    new version whose schema is the union, with prior rows null-filled
-    and time travel back to the pre-evolution snapshot intact."""
+    """End-to-end through ParquetStateStore: a schema-changing batch skips
+    the partition-selective path, and ``store.merge`` itself commits the
+    full read → merge_cdc_batch → overwrite result — a new version whose
+    schema is the union, with prior rows null-filled and time travel back
+    to the pre-evolution snapshot intact."""
     from kafka2delta_spark.state.store import ParquetStateStore
 
     store = ParquetStateStore(
@@ -104,15 +104,16 @@ def test_store_full_rewrite_path_with_evolution(spark, tmp_path):
         [(2, 1, 21, "b2", 7, "false"), (3, 0, 5, "c", 9, "false")],
         "id long, bucket int, lsn long, v string, extra long, __deleted string",
     )
-    # selective merge must bail on the widened schema
-    assert (
-        store.merge(changes, ["id"], lsn_col="lsn", deleted_col="__deleted")
-        is False
+    # the state equals the full evolving merge of the prior snapshot
+    want = sorted(
+        merge_cdc_batch(store.read(), changes, ["id"], lsn_col="lsn")
+        .select("id", "bucket", "lsn", "v", "extra")
+        .collect()
     )
-    merged = merge_cdc_batch_evolving(
-        store.read(), changes, ["id"], lsn_col="lsn"
-    )
-    store.overwrite(merged)
+    store.merge(changes, ["id"], lsn_col="lsn", deleted_col="__deleted")
+    assert sorted(
+        store.read().select("id", "bucket", "lsn", "v", "extra").collect()
+    ) == want
     out = {
         r["id"]: (r["v"], r["extra"]) for r in store.read().collect()
     }

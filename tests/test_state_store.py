@@ -6,11 +6,25 @@ import os
 
 import pytest
 
+from kafka2delta_spark.cdc.merge import merge_cdc_batch
 from kafka2delta_spark.state.store import ParquetStateStore
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _by_name(df):
+    """Column set plus rows keyed by column name, independent of order."""
+    cols = sorted(df.columns)
+    return cols, sorted((tuple(r[c] for c in cols) for r in df.collect()), key=repr)
+
+
+def _full_merge(store, changes):
+    """``merge_cdc_batch(prior, changes)``, materialised before the commit."""
+    return _by_name(
+        merge_cdc_batch(store.read(), changes, ["id"], "lsn", "__deleted")
+    )
 
 
 @pytest.fixture()
@@ -153,7 +167,7 @@ def test_selective_merge_rewrites_only_touched_partition(spark, pstore):
     changes = spark.createDataFrame(
         [(3, "c2", 20, 2024, "false"), (4, "d", 20, 2024, "false")], CHANGE_SCHEMA
     )
-    assert pstore.merge(changes, ["id"], "lsn", "__deleted") is True
+    pstore.merge(changes, ["id"], "lsn", "__deleted")
     assert _rows(pstore.read().select("id", "v")) == [
         (1, "a"), (2, "b"), (3, "c2"), (4, "d")
     ]
@@ -174,7 +188,7 @@ def test_selective_merge_rewrites_only_touched_partition(spark, pstore):
 
 def test_selective_merge_deleting_whole_partition(spark, pstore):
     changes = spark.createDataFrame([(3, "c", 20, 2024, "true")], CHANGE_SCHEMA)
-    assert pstore.merge(changes, ["id"], "lsn", "__deleted") is True
+    pstore.merge(changes, ["id"], "lsn", "__deleted")
     assert _rows(pstore.read().select("id")) == [(1,), (2,)]
     # the emptied partition must not resurrect via hardlinking
     assert not os.path.isdir(
@@ -187,20 +201,41 @@ def test_selective_merge_falls_back_on_schema_change(spark, pstore):
         [(5, "e", 20, 2023, "+49", "false")],
         "id long, v string, lsn long, year int, phone string, __deleted string",
     )
-    assert pstore.merge(changes, ["id"], "lsn", "__deleted") is False
+    want = _full_merge(pstore, changes)
+    pstore.merge(changes, ["id"], "lsn", "__deleted")
+    assert _by_name(pstore.read()) == want
+    assert "phone" in pstore.read().columns and len(pstore.history()) == 2
 
 
 def test_selective_merge_falls_back_on_null_partition_value(spark, pstore):
     changes = spark.createDataFrame(
         [(5, "e", 20, None, "false")], CHANGE_SCHEMA
     )
-    assert pstore.merge(changes, ["id"], "lsn", "__deleted") is False
+    want = _full_merge(pstore, changes)
+    pstore.merge(changes, ["id"], "lsn", "__deleted")
+    assert _by_name(pstore.read()) == want
+
+
+def test_merge_unpartitioned_store_equals_full_merge(spark, store):
+    store.overwrite(
+        spark.createDataFrame([(1, "a", 10, 2023), (2, "b", 10, 2023)], SCHEMA)
+    )
+    changes = spark.createDataFrame(
+        [(1, "a2", 20, 2023, "false"), (2, "b", 20, 2023, "true"),
+         (3, "c", 5, 2024, "false")],
+        CHANGE_SCHEMA,
+    )
+    want = _full_merge(store, changes)
+    store.merge(changes, ["id"], "lsn", "__deleted")
+    assert _by_name(store.read()) == want
+    assert _rows(store.read().select("id", "v")) == [(1, "a2"), (3, "c")]
+    assert store.history() == [1, 2]
 
 
 def test_selective_merge_empty_changes_is_noop(spark, pstore):
     before = pstore.history()[-1]
     changes = spark.createDataFrame([], CHANGE_SCHEMA)
-    assert pstore.merge(changes, ["id"], "lsn", "__deleted") is True
+    pstore.merge(changes, ["id"], "lsn", "__deleted")
     assert pstore.history()[-1] == before  # no new version committed
     assert _rows(pstore.read().select("id", "v")) == [(1, "a"), (2, "b"), (3, "c")]
 
@@ -210,22 +245,46 @@ def test_selective_merge_falls_back_on_hive_unsafe_partition_value(
 ):
     # boolean partition values: Python str() gives "True" but the hive
     # writer emits "true" — the computed leaf name would miss the on-disk
-    # dir and hardlink a touched partition (row duplication). Must fall
-    # back to the full-rewrite path instead.
+    # dir and hardlink a touched partition (row duplication). Must take
+    # the full-rewrite path instead.
     schema = "id long, v string, lsn long, flag boolean"
     s = ParquetStateStore(spark, str(tmp_path / "btbl"), partition_cols=["flag"])
     s.overwrite(spark.createDataFrame([(1, "a", 10, True)], schema))
     changes = spark.createDataFrame(
         [(1, "a2", 20, True, "false")], schema + ", __deleted string"
     )
-    assert s.merge(changes, ["id"], "lsn", "__deleted") is False
+    want = _full_merge(s, changes)
+    s.merge(changes, ["id"], "lsn", "__deleted")
+    assert _by_name(s.read()) == want
+    assert _rows(s.read().select("id", "v")) == [(1, "a2")]
     # string values containing hive-escaped characters likewise
     s2 = ParquetStateStore(spark, str(tmp_path / "stbl"), partition_cols=["v"])
     s2.overwrite(spark.createDataFrame([(1, "a:b", 10, True)], schema))
     ch2 = spark.createDataFrame(
         [(1, "a:b", 20, True, "false")], schema + ", __deleted string"
     )
-    assert s2.merge(ch2, ["id"], "lsn", "__deleted") is False
+    want2 = _full_merge(s2, ch2)
+    s2.merge(ch2, ["id"], "lsn", "__deleted")
+    assert _by_name(s2.read()) == want2
+    assert _rows(s2.read().select("id", "lsn")) == [(1, 20)]
+
+
+def test_partitioned_named_store_commits_empty_snapshot(spark, tmp_path):
+    """Deleting every row of a partitioned, catalog-named store commits a
+    snapshot with no data file; the catalog view must still resolve, typed
+    from the stored schema, instead of failing schema inference after the
+    version pointer has already flipped."""
+    s = ParquetStateStore(
+        spark, str(tmp_path / "etbl"), partition_cols=["year"],
+        table_name="k2d_empty.t1",
+    )
+    s.overwrite(spark.createDataFrame([(1, "a", 10, 2023)], SCHEMA))
+    changes = spark.createDataFrame([(1, "a", 20, 2023, "true")], CHANGE_SCHEMA)
+    s.merge(changes, ["id"], "lsn", "__deleted")
+    assert s.history() == [1, 2]
+    view = spark.table("k2d_empty.t1")
+    assert view.count() == 0
+    assert view.schema == s.read().schema
 
 
 def test_read_changes_change_data_feed(spark, store):
